@@ -11,13 +11,21 @@ normalization must keep handling.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
 
+from wikipedia_data_pipeline_spark import registry
+from wikipedia_data_pipeline_spark.sources import tables
 from wikipedia_data_pipeline_spark.sources.tables import (
     TABLE_NAMES,
     load_table,
     normalize_event_time,
+    parquet_schema,
 )
 
 # engine-facing dtypes per table (post-normalization), the contract every
@@ -141,3 +149,91 @@ def test_normalize_event_time_handles_all_encodings(spark):
         out = normalize_event_time(df)
         assert out.schema["ts"].dataType.simpleString() == "bigint"
         assert out.collect()[0].ts == want, df.schema
+
+
+# ---------------------------------------------------------------------------
+# load_table reads through parquet_schema's cached inference: same schema
+# and rows as plain inference, no Spark job once warm, never stale
+# ---------------------------------------------------------------------------
+
+
+def _jobs_in(spark, group, fn):
+    """Number of Spark jobs ``fn()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_matches_plain_inference(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    for name in TABLE_NAMES:
+        ref = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        if name == "events":
+            ref = normalize_event_time(ref)
+        for _ in range(2):  # cold (inferring) and warm (cached) read
+            df = load_table(spark, sf_dir, name)
+            assert df.schema == ref.schema, name
+            assert df.count() == ref.count(), name
+            assert df.exceptAll(ref).count() == 0, name
+            assert ref.exceptAll(df).count() == 0, name
+
+
+def test_warm_query_build_starts_no_spark_jobs(spark, sf_dir):
+    queries = registry.spark_queries()
+    names = ["q1_pricing_summary", "q1_pricing_summary_cents",
+             "q3_shipping_priority"]
+    for name in names:
+        queries[name](spark, sf_dir)  # warm-up: first inference per table
+    # the counter sees an inference job when there is one
+    lineitem = os.path.join(sf_dir, "lineitem.parquet")
+    assert _jobs_in(spark, "wdp_canary_infer",
+                    lambda: spark.read.parquet(lineitem)) >= 1
+    for name in names:
+        jobs = _jobs_in(spark, f"wdp_canary_build_{name}",
+                        lambda: queries[name](spark, sf_dir))
+        assert jobs == 0, (name, jobs)
+
+
+def test_schema_cache_sees_rewrites_and_missing_paths(spark, tmp_path):
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(
+        pa.table({"r_regionkey": [1, 2], "r_name": ["a", "b"]}), path
+    )
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(df.collect()) == [(1, "a"), (2, "b")]
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_table(spark, str(tmp_path / "missing"), "region")
+
+
+def test_schema_cache_is_keyed_on_inference_confs(spark, tmp_path):
+    path = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert parquet_schema(spark, path)["b"].dataType == T.BinaryType()
+        spark.conf.set(key, "true")
+        assert parquet_schema(spark, path)["b"].dataType == T.StringType()
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_schema_cache_is_bounded(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    monkeypatch.setattr(tables, "_SCHEMA_CACHE_MAX", 2)
+    for i in range(3):
+        path = str(tmp_path / f"t{i}.parquet")
+        pq.write_table(pa.table({f"c{i}": [i]}), path)
+        assert parquet_schema(spark, path).names == [f"c{i}"]
+    assert len(tables._SCHEMAS) == 2
+    assert [k[0] for k in tables._SCHEMAS] == [
+        str(tmp_path / "t1.parquet"), str(tmp_path / "t2.parquet")]

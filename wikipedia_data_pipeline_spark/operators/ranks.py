@@ -67,7 +67,15 @@ def track_persisted(df: DataFrame) -> DataFrame:
     tests/test_round14.py::test_no_untracked_persists. A raw persist is
     worse than a leak: Spark's CacheManager matches relations by
     canonicalized logical plan, so an identical re-run silently reads
-    the prior run's cache, corrupting best-of-N timing (r13 verdict #1)."""
+    the prior run's cache, corrupting best-of-N timing (r13 verdict #1).
+
+    Release contract: a tracked relation whose lineage roots in storage
+    its builder deletes before returning (the streaming
+    ``run_foreach_batch_compaction`` and ``run_streaming_mv`` results
+    read a temp store that is removed once the cache is materialized)
+    has no lineage left to recompute from. Such a result must be fully
+    consumed (collected or written) before ``unpersist_all`` runs; after
+    it, reading the result fails because the store's files are gone."""
     _PERSISTED.append(df)
     return df
 

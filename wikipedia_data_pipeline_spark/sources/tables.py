@@ -2,15 +2,18 @@
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file per table under
-``/root/testdata/sf{SF}/``. Scans are plain ``spark.read.parquet`` so
-Catalyst gets predicate pushdown + column pruning for free; at cluster
-scale the same calls point at partitioned/bucketed parquet layouts and
-partition pruning kicks in with zero code change.
+``/root/testdata/sf{SF}/``. Scans are plain parquet reads so Catalyst
+gets predicate pushdown + column pruning for free; at cluster scale the
+same calls point at partitioned/bucketed parquet layouts and partition
+pruning kicks in with zero code change. The inferred schema of each
+file is cached (``parquet_schema``), so only a table's first read pays
+Spark's footer-reading inference job.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,11 +83,70 @@ def _ensure_nanos_as_long(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
+# Session confs that change what parquet schema inference returns; they
+# are part of the schema cache key, so a session that sets them
+# differently never sees another session's schema.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_CACHE_MAX = 64
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _stat_signature(path: str) -> tuple | None:
+    """(st_ino, st_size, st_mtime_ns) of ``path``, or of every file under
+    it when it is a directory; None when it cannot be stat'ed locally
+    (missing, or an ``s3a://``-style URI)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((st.st_ino, st.st_size, st.st_mtime_ns),)
+        sig = []
+        for root, _, files in os.walk(path):
+            for f in files:
+                s = os.stat(os.path.join(root, f))
+                sig.append((root, f, s.st_ino, s.st_size, s.st_mtime_ns))
+        return tuple(sorted(sig))
+    except OSError:
+        return None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema Spark infers for the parquet at ``path``, cached per
+    process.
+
+    Inference starts a Spark job that reads a file footer, on every
+    ``spark.read.parquet`` call; handing the schema back to
+    ``spark.read.schema`` skips that job, so building a query starts
+    none. The key is the path, the stat signature of its files and the
+    session's inference confs, so a rewritten file or a session with
+    other confs re-infers. A path that cannot be stat'ed locally is
+    inferred on every call, exactly as a plain read would, so its
+    errors (``PATH_NOT_FOUND``) surface unchanged. The returned schema
+    is shared: pass it to a reader, do not mutate it."""
+    _ensure_nanos_as_long(spark)
+    sig = _stat_signature(path)
+    if sig is None:
+        return spark.read.parquet(path).schema
+    key = (path, sig, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        if len(_SCHEMAS) >= _SCHEMA_CACHE_MAX:  # drop the oldest entry
+            _SCHEMAS.pop(next(iter(_SCHEMAS), None), None)
+        _SCHEMAS[key] = schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    _ensure_nanos_as_long(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_event_time(df)
     return df

@@ -39,7 +39,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event stream with ``ts`` normalized to BIGINT epoch-µs.
 
     The file-stream source requires an explicit schema; deriving it from
-    the parquet footer (a metadata-only batch read) instead of
+    the parquet footer (the batch catalog's cached inference) instead of
     hard-coding one means a testdata regeneration that changes the ts
     encoding cannot silently shift the time domain — the dtype dispatch
     in normalize_event_time handles ns-int64 / TIMESTAMP / TIMESTAMP_NTZ
@@ -47,12 +47,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from wikipedia_data_pipeline_spark.sources.tables import (
-        _ensure_nanos_as_long,
         normalize_event_time,
+        parquet_schema,
     )
 
-    _ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
     raw = (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -512,7 +511,10 @@ def run_foreach_batch_compaction(
     )
     # tracked (r14): released by ranks.unpersist_all; the cache is
     # load-bearing against the removed temp store, and each bench/test
-    # invocation builds a fresh store, so releasing between runs is safe
+    # invocation builds a fresh store, so releasing between runs is safe.
+    # Callers must consume the result before unpersist_all: its lineage
+    # roots in the temp store deleted below, so once the cache is
+    # released nothing can recompute it (ranks.track_persisted).
     from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
 
     out = track_persisted(out)
@@ -677,7 +679,8 @@ def run_streaming_mv(
     from wikipedia_data_pipeline_spark.operators.ranks import track_persisted
 
     # tracked (r14): same load-bearing-cache + fresh-store-per-run note
-    # as run_foreach_batch_compaction above
+    # as run_foreach_batch_compaction above, and the same rule: consume
+    # the result before unpersist_all, since its store is deleted below
     out = track_persisted(
         I.finalize(
             spark.read.parquet(os.path.join(store_dir, f"v{versions[-1]}")),
